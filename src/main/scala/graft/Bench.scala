@@ -22,9 +22,12 @@ object Bench {
     val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     if (warmDir.isDirectory) names.foreach { n =>
       try SparkEntry.queries(n)(spark, warmDir.toString).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"BENCHWARMFAIL $n: $e") }
       spark.catalog.clearCache()
     }
+    // cells that threw in any pass: a failed cell still adds its elapsed
+    // time, is named in the summary, and fails the run
+    val failed = scala.collection.mutable.SortedSet[String]()
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
       // snapshot the RDDs persisted BEFORE the query so the post-query
@@ -34,7 +37,8 @@ object Bench {
       // a later use would fail with block-not-found, not recompute
       val preIds = spark.sparkContext.getPersistentRDDs.keySet
       val n = try { SparkEntry.queries(name)(spark, sfDir).count() } catch {
-        case e: Throwable => System.err.println(s"BENCHFAIL $name: $e"); -1L
+        case e: Throwable =>
+          System.err.println(s"BENCHFAIL $name: $e"); failed += name; -1L
       }
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"BENCHQ $name rows=$n%d sec=$dt%.2f")
@@ -80,10 +84,14 @@ object Bench {
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     // contract: the LAST stdout line is a short, fixed-size summary that
     // survives any tail window; consumers wanting per-query medians read
-    // BENCH_LOCAL.json (or the detail line above when their capture allows)
+    // BENCH_LOCAL.json (or the detail line above when their capture allows).
+    // Only a failing run grows it, by the names of its failed cells.
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val shortJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,""" +
-      s""""nqueries":${names.length},"total_min":${r3(totalMin)},"detail":"BENCH_LOCAL.json","sf":"$sfDir"}"""
+      s""""nqueries":${names.length},"total_min":${r3(totalMin)},"detail":"BENCH_LOCAL.json","sf":"$sfDir",""" +
+      s""""nfailed":${failed.size},"failed":$failedJson}"""
     println(shortJson)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

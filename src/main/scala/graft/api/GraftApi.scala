@@ -58,24 +58,51 @@ final class GraftApi(spark: SparkSession, root: String) {
       .orderBy("element_name", "name")
   }
 
-  // POST /api/download (web_app.py:115-186): THE export query (§3.1).
-  // Multi-element export groups by (element_name, timestamp) — the
-  // intended semantics, not the reference's arbitrary-label bug (§2.8 V2).
+  /** POST /api/download (web_app.py:115-186): THE export query (§3.1),
+    * one row per timestamp and one column per attribute name, sorted by
+    * name (deterministic pivot schema, §7.4-1). A multi-element export
+    * groups by (element_name, timestamp) — the intended semantics, not
+    * the reference's arbitrary-label bug (§2.8 V2).
+    *
+    * The request's fixed cost is its job count, so the plan keeps it
+    * small:
+    *  - the selected elements' attributes resolve on the driver, from
+    *    two filtered collects of the catalog-sized dimension tables
+    *    (inner-join semantics: an attribute whose element is missing
+    *    is dropped);
+    *  - the archive scan filters `attribute_id IN (ids)` and, for a
+    *    multi-element export, takes `element_name` from a map literal
+    *    keyed by attribute id — no join, no broadcast;
+    *  - the pivot is ONE aggregation, a `first(value)` per name over
+    *    that name's ids, where Spark's `pivot` plans two;
+    *  - the three tables' parquet schemas are reused across requests
+    *    ([[graft.catalog.ArchiveStore.read]]), so no inference job runs
+    *    once the catalog is warm.
+    */
   def export(db: String, elementIds: Seq[Int],
       start: Option[String], end: Option[String]): DataFrame = {
     val c = catalog(db)
-    val attrs = c.attributes.filter(col("element_id").isin(elementIds: _*))
-      .join(broadcast(c.elements.select(col("element_id"), col("name").as("element_name"))),
-        Seq("element_id"))
-      .select(col("attribute_id"), col("name").as("attribute_name"), col("element_name"))
-    val attrNames = attrs.select("attribute_name").distinct()
-      .collect().map(_.getString(0)).sorted // deterministic pivot schema (§7.4-1)
-    val scan = c.archiveRange(start, end) // partition-pruned time range
-      .join(broadcast(attrs), Seq("attribute_id"))
+    val elementName = c.elements.filter(col("element_id").isin(elementIds: _*))
+      .select("element_id", "name").collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    val attrs = c.attributes
+      .filter(col("element_id").isin(elementIds: _*) && col("attribute_id").isNotNull)
+      .select("attribute_id", "name", "element_id").collect().toSeq
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+      .filter { case (_, _, e) => elementName.contains(e) }
     val keys = if (elementIds.sizeIs > 1) Seq("element_name", "timestamp") else Seq("timestamp")
-    Relational.pivotWide(scan, keys, "attribute_name", attrNames, "value",
-        cellAgg = c => first(c, ignoreNulls = true))
-      .orderBy(keys.map(col): _*)
+    val scan = c.archiveRange(start, end) // partition-pruned time range
+      .filter(col("attribute_id").isin(attrs.map(_._1): _*))
+      .withColumn("element_name", element_at(
+        typedLit(attrs.map { case (id, _, e) => id -> elementName(e) }.toMap), col("attribute_id")))
+    val cells = attrs.groupBy(_._2).toSeq.sortBy(_._1).map { case (name, as) =>
+      first(when(col("attribute_id").isin(as.map(_._1): _*), col("value")), ignoreNulls = true)
+        .as(name)
+    }
+    val wide =
+      if (cells.isEmpty) scan.select(keys.map(col): _*).distinct()
+      else scan.groupBy(keys.map(col): _*).agg(cells.head, cells.tail: _*)
+    wide.orderBy(keys.map(col): _*)
   }
 
   /** Export sinks (S5/S6): CSV/parquet with the reference's timestamped

@@ -22,18 +22,31 @@ import graft.tree.Hierarchy
   * is the only big table: mutations against it are expressed as
   * anti-join rewrites here; a production deployment would make them
   * partition-scoped overwrites on the date partitioning.
+  *
+  * Every table read goes through [[ArchiveStore.read]], which reuses a
+  * table's parquet schema per path (not per `Catalog`: the API builds a
+  * new instance per call, and an ingest may write through a different
+  * instance than an export reads through). The writers here that create
+  * or replace a table drop its schema — [[writeDim]] and
+  * [[rewriteArchive]], hence `insertElement`, `insertAttribute`,
+  * `updateAttribute`, `deleteElement`, `deleteAttribute` and
+  * `repopulate`. Appends and upserts keep it: they never change the
+  * column types, and the files they add are found because each read
+  * still lists the table's files.
   */
 final class Catalog(val spark: SparkSession, root: String, val database: String) {
 
   private def path(table: String) = s"$root/$database/$table"
   private def exists(table: String) = Files.exists(Paths.get(path(table), "_SUCCESS"))
 
+  private def read(table: String) = ArchiveStore.read(spark, path(table))
+
   def elements: DataFrame =
-    if (exists("element")) spark.read.parquet(path("element"))
+    if (exists("element")) read("element")
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.element)
 
   def attributes: DataFrame =
-    if (exists("attribute")) spark.read.parquet(path("attribute"))
+    if (exists("attribute")) read("attribute")
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.attribute)
 
   /** Archive columns in contract order (readers drop the physical
@@ -42,7 +55,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
 
   def archive: DataFrame =
     if (exists("archive"))
-      spark.read.parquet(path("archive")).select(archiveCols.map(col): _*)
+      read("archive").select(archiveCols.map(col): _*)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.archive)
 
   /** Time-bounded archive scan with PARTITION pruning: the store is
@@ -53,7 +66,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
   def archiveRange(start: Option[String], end: Option[String]): DataFrame = {
     if (!exists("archive"))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.archive)
-    val raw = spark.read.parquet(path("archive"))
+    val raw = read("archive")
     val t = raw.schema("timestamp").dataType
     val bounded = Seq(
       start.map(s => col("p_date") >= to_date(lit(s)) && col("timestamp") >= lit(s).cast(t)),
@@ -64,12 +77,14 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
 
   /** Dimension rewrite: collect-free overwrite via temp dir + move is
     * unnecessary at catalog size — a driver-side materialize breaks the
-    * read-overwrite cycle safely. Single-writer by contract. */
+    * read-overwrite cycle safely. Single-writer by contract. Drops the
+    * table's schema, since the rewrite may change it. */
   private def writeDim(table: String, df: DataFrame): Unit = {
     val rows = df.collect().toSeq
     val fresh = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), df.schema)
     fresh.write.mode(SaveMode.Overwrite).parquet(path(table))
+    ArchiveStore.forget(path(table))
   }
 
   /** Writes are date-partitioned (`p_date`, [[ArchiveStore]]): appends
@@ -84,6 +99,8 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
   def upsertArchive(recomputed: DataFrame): Unit =
     ArchiveStore.upsert(spark, path("archive"), recomputed)
 
+  /** Replaces the archive with `df` (written aside, then moved in) and
+    * drops its schema: the replacement may carry another timestamp type. */
   private def rewriteArchive(df: DataFrame): Unit = {
     val tmp = path("archive__rewrite")
     ArchiveStore.write(df, SaveMode.Overwrite, tmp)
@@ -93,6 +110,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
         .forEach(p => Files.delete(p))
     }
     Files.move(Paths.get(tmp), dst)
+    ArchiveStore.forget(path("archive"))
   }
 
   private def nextId(df: DataFrame, idCol: String): Int = {

@@ -4,8 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.api.GraftApi
 
 /** Serving-layer halves of the export surface: the chunked CSV stream
@@ -88,19 +86,13 @@ class ExportServingSpec extends SparkSpec {
 
   test("S8: the stream is a lazy iterator — header costs zero Spark jobs") {
     val a = api()
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val ((it, header), jobs) = jobsDuring {
       val it = a.streamExportCsv(fixtureFrame())
-      val header = it.next()
-      Thread.sleep(200) // let any (unexpected) job-start events drain
-      assert(header === "id,label,score,ts")
-      assert(jobs === 0, "header consumption must not execute the frame")
-      assert(it.size === 3) // rows only arrive as the consumer advances
-    } finally spark.sparkContext.removeSparkListener(listener)
+      (it, it.next())
+    }
+    assert(header === "id,label,score,ts")
+    assert(jobs.isEmpty, "header consumption must not execute the frame")
+    assert(it.size === 3) // rows only arrive as the consumer advances
   }
 
   test("S10/F12: cleanupExports deletes only pi_data_* artifacts past the cutoff") {

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,4 +30,29 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir: String = TestSession.sfDir
+
+  /** Runs `body` and returns its result with the start events of the
+    * Spark jobs it ran. Listener delivery is asynchronous, so a marked
+    * sentinel job runs last: events arrive in order, and once the
+    * sentinel's start is seen every earlier job's start has been too. */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val marker = "graft.test.sentinel"
+    val seen = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(_.getProperty(marker) != null)) drained.countDown()
+        else seen.add(s)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
